@@ -238,7 +238,10 @@ def main() -> None:
     pool = list(BENCH_QUERIES)
     if os.environ.get("SPARK_GRAFT_BENCH_INCLUDE_SPOT", "").strip():
         pool += SPOT_CHECK_QUERIES
-    names = [n for n in pool if n in QUERIES]
+    unknown = [n for n in pool if n not in QUERIES]
+    if unknown:
+        raise ValueError(f"bench slots name unregistered queries: {unknown}")
+    names = pool
     # Triage/re-pin mode: run only the named slots (comma-separated
     # prefixes), e.g. SPARK_GRAFT_BENCH_ONLY=hq06,p62 — used for
     # idle-box min-of-N pins without paying the full suite.

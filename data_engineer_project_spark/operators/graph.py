@@ -31,10 +31,10 @@ re-exchanged the whole edge set inside EVERY round. The dedup still
 costs exactly one exchange: ``repartition(e_src)`` followed by
 ``dropDuplicates([e_src, e_dst])`` plans the aggregate WITHOUT its own
 exchange because hash(e_src) already clusters equal (e_src, e_dst)
-rows. Callers whose pair set is distinct with src < dst by
-construction (verified near-dup pairs) pass ``pairs_unique=True`` and
-skip the dedup aggregate entirely — the mirrored union of such pairs
-cannot contain duplicates.
+rows. Callers whose pair set has no duplicate unordered pairs, no
+self-loops and one orientation per pair by construction (verified
+near-dup pairs) pass ``pairs_unique=True`` and skip the dedup aggregate
+entirely — the mirrored union of such pairs cannot contain duplicates.
 """
 
 from __future__ import annotations
@@ -168,10 +168,10 @@ def connected_components(
     if needed).
 
     ``pairs_unique=True`` asserts the caller's pair set has no
-    duplicate rows and ``src < dst`` on every row — then the mirrored
-    union is distinct by construction and the dedup aggregate is
-    skipped (performance only; duplicate edges would not change the
-    labels, just the per-round cost).
+    duplicate unordered pairs, no self-loops, and one orientation per
+    pair — then the mirrored union is distinct by construction and the
+    dedup aggregate is skipped (performance only; duplicate edges would
+    not change the labels, just the per-round cost).
     """
     # The convergence probe sums labels as decimal; a non-numeric id
     # type would cast to NULL, make every checksum None, and stop the

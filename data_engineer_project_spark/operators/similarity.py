@@ -199,8 +199,15 @@ def _banded_sigs_arrow(
     - the sign test (> 0), the bit weights (1 << r), and
       sqrt-of-self-fold for the norm are single IEEE ops, identical in
       both engines. Parity is pinned by
-      tests/test_round14_opt.py::test_banded_sigs_arrow_matches_hof
+      tests/test_round15_opt.py::test_banded_sigs_arrow_matches_hof
       and by the DuckDB oracle hashes of every consumer (d10/d16/…).
+
+    Input contract: ``id_col`` is ``bigint`` and ``vec_col`` is
+    ``array<float>`` — the stage's output schema — checked here, so a
+    different type raises instead of being silently cast. Every vector
+    must be finite and non-null (a precondition, not checked per row):
+    on NaN the engines differ (Spark orders NaN > 0 true, numpy false),
+    and a null vector gives bucket-0 rows under HOF but fails here.
 
     Why: the HOF lambdas evaluate INTERPRETED, per element, per plane
     — at the 24-plane cap that is ~3,000 interpreted lambda steps per
@@ -210,6 +217,15 @@ def _banded_sigs_arrow(
     narrow (id, vec) Arrow round trip — §4.2's prescription. Heavy
     setup (the plane matrix) is built once per task before the batch
     loop (§4.5)."""
+    got = (
+        df.schema[id_col].dataType.simpleString(),
+        df.schema[vec_col].dataType.simpleString(),
+    )
+    if got != ("bigint", "array<float>"):
+        raise ValueError(
+            f"banded_lsh_sigs(engine='arrow') needs {id_col} bigint and "
+            f"{vec_col} array<float>, got {got[0]} and {got[1]}"
+        )
     rows = [
         [float(v) for v in hyperplane(bnd * MAX_PLANES + r, dim)]
         for bnd in range(num_bands)

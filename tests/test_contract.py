@@ -48,85 +48,3 @@ def test_all_oracles_parse_in_duckdb():
         except Exception as exc:  # pragma: no cover
             pytest.fail(f"oracle for {name} does not parse: {exc}")
 
-
-def test_gate_order_puts_unverified_families_first():
-    """The driver records a ~50-entry prefix of queries() per round;
-    queries/__init__ re-ranks by green-count across ALL past
-    CORRECTNESS_r*.json files so never-verified queries come first.
-    Derive the expectation from the same files instead of pinning a
-    family name, so the assertion stays true as rounds accumulate."""
-    from data_engineer_project_spark.queries import _green_counts
-
-    greens = _green_counts()
-    names = list(QUERIES)
-
-    # Primary invariant: every never-checked query precedes every
-    # checked one.  (A rows-only "no_oracle" result counts as checked —
-    # it must not squat on a gate slot forever.)
-    counts = [greens.get(n, 0) for n in names]
-    assert counts == sorted(counts), [
-        (n, c) for n, c in zip(names, counts)
-    ][:10]
-
-    # Secondary invariant: the 0-green block splits into never-driver-
-    # seen (no historical green either) before regates (superseded
-    # green on record) — so a gate-overflow always drops a query the
-    # driver has at least once run — and family rank is respected
-    # (h < d < e < s < m < p < q < other) within EACH sub-block.
-    from data_engineer_project_spark.queries import (
-        _FAMILY_RANK,
-        _green_counts,
-    )
-
-    hist = _green_counts(respect_cutoffs=False)
-    zero_block = [n for n in names if greens.get(n, 0) == 0]
-    seen_flags = [1 if hist.get(n, 0) > 0 else 0 for n in zero_block]
-    assert seen_flags == sorted(seen_flags), list(
-        zip(zero_block, seen_flags)
-    )
-    for flag in (0, 1):
-        sub = [n for n in zero_block if (1 if hist.get(n, 0) > 0 else 0) == flag]
-        fam = [_FAMILY_RANK.get(n[0], 7) for n in sub]
-        assert fam == sorted(fam), list(zip(sub, fam))[:10]
-
-
-def test_gate_ranking_stable_against_future_round_files(tmp_path):
-    """Simulate the next driver round: _green_counts over a tmp root
-    holding a normal round file, a malformed list-rooted one, and a
-    rows-only (no_oracle) entry. The ranking must (a) not crash on the
-    malformed file, (b) count no_oracle-with-rows as checked, and
-    (c) keep all 0-green queries ahead of all checked ones."""
-    import json
-
-    from data_engineer_project_spark.queries import (
-        _FAMILY_RANK,
-        _green_counts,
-        rank_names,
-    )
-
-    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps({
-        "hq01_x": {"err": None, "rows_match": True, "schema_match": True,
-                   "hash_match": True},
-        "hq02_x": {"err": "boom", "rows_match": False},
-        "d17_x": {"err": "no_oracle", "spark_rows": 12},
-        "d18_x": {"err": "no_oracle", "spark_rows": None},
-    }))
-    # list-rooted JSON (the round-2 advisor's crash shape) — ignored
-    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps(["oops"]))
-    # same query green again in a later round → count accumulates
-    (tmp_path / "CORRECTNESS_r03.json").write_text(json.dumps({
-        "hq01_x": {"err": None, "rows_match": True, "schema_match": True,
-                   "hash_match": True},
-    }))
-
-    greens = _green_counts(tmp_path)
-    assert greens == {"hq01_x": 2, "d17_x": 1}
-
-    names = ["hq01_x", "hq02_x", "d17_x", "d18_x", "p01_x"]
-    order = rank_names(names, greens)
-    counts = [greens.get(n, 0) for n in order]
-    assert counts == sorted(counts)
-    assert order[-1] == "hq01_x"  # most-checked last
-    zero = [n for n in order if greens.get(n, 0) == 0]
-    fams = [_FAMILY_RANK.get(n[0], 7) for n in zero]
-    assert fams == sorted(fams)

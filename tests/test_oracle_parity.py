@@ -31,25 +31,27 @@ _RECENTLY_TOUCHED = {
     "d13_embedding_near_dup",
     "d16_ann_recall",
     "d20_dedup_clusters",
-    "d21_semantic_near_dup",
     "d26_quality_survivor",
     "d29_minhash_estimator_quality",
     "d31_semantic_decontamination",
     "d34_containment_dedup",
     "d38_curation_containment",
-    "d65_neardup_clusters",
+    "d65_neardup_doc_clusters",
     "d82_ivfpq_recall",
     "d86_knn_label_probe",
-    "d93_train_test_cosine_overlap",
     "d94_chunk_retrieval_eval",
     "d96_dedup_threshold_calibration",
     "d100_incremental_neardup_ingest",
     "m10_image_neardup_clusters",
-    "s24_stream_dedup_gate",
+    "s24_stream_neardup_probe",
     "s25_stream_cluster_maintenance",
 }
 
 _DEFAULT_LANE = set(BENCH_QUERIES) | set(SPOT_CHECK_QUERIES) | _RECENTLY_TOUCHED
+# A lane name that is not registered would silently run nothing.
+_UNKNOWN = sorted(_DEFAULT_LANE - set(QUERIES))
+if _UNKNOWN:
+    raise ValueError(f"default oracle lane names unregistered queries: {_UNKNOWN}")
 
 _PARAMS = [
     name

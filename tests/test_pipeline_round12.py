@@ -251,33 +251,6 @@ def test_gif_color_palette_with_gray_pixels_stays_rgb():
     assert frames[0][1] is False
 
 
-def test_rank_names_staleness_breaks_count_ties():
-    """r11 verdict item 7: among rows with EQUAL effective green
-    counts, the one whose latest effective green is OLDEST ranks
-    first — a p-row green only in round 1 must outrank an e-row
-    re-greened in round 11, regardless of family rank."""
-    from data_engineer_project_spark.queries import rank_names
-
-    names = ["e01_x", "p01_x", "d01_x", "p02_x"]
-    greens = {"e01_x": 1, "p01_x": 1, "d01_x": 0, "p02_x": 1}
-    hist = dict(greens)
-    last = {"e01_x": 11, "p01_x": 1, "p02_x": 4}
-    order = rank_names(names, greens, hist, last)
-    assert order[0] == "d01_x"  # zero-effective still first
-    assert order[1:] == ["p01_x", "p02_x", "e01_x"]  # stalest first
-
-
-def test_registry_gate_prefix_contains_stale_practice_rows():
-    """The driver's ~50-slot sample (a prefix of queries()) must
-    surface the stalest families: with 34 p-rows whose only driver
-    green is round 1, the live registry's first 50 names include
-    p-rows (the r11 sample drew only recently-regated families)."""
-    from data_engineer_project_spark.queries import QUERIES
-
-    first50 = list(QUERIES)[:50]
-    assert any(n.startswith("p") for n in first50), first50
-
-
 def test_streaming_plancap_captures_microbatch_plan(spark):
     """r11 verdict item 6: the streaming bench slots carry DIRECT
     micro-batch plan evidence — grab_stream records the finished

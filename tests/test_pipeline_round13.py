@@ -1,8 +1,7 @@
 """Round-13 pins: the native tier's strictness acceptance envelope,
-the code-enforced engine-tier boundary, the hq-family regate surfacing
-through the staleness gate, and the concurrency/robustness fixes from
-the round-12 advice (plan_identity render lock, ExternalRDD leaf
-guard, sidecar desync cleanup).
+the code-enforced engine-tier boundary, and the concurrency/robustness
+fixes from the round-12 advice (plan_identity render lock,
+ExternalRDD leaf guard, sidecar desync cleanup).
 
 Context (r12 verdict item 6): the native (ImageIO/AudioSystem) decode
 tier is LENIENT where the Python codecs — the strictness authority —
@@ -16,7 +15,6 @@ tier; the fuzz test here pins that envelope.
 
 from __future__ import annotations
 
-import json
 import struct
 
 import numpy as np
@@ -24,65 +22,6 @@ import pytest
 
 import data_engineer_project_spark.operators.multimodal as mm
 import data_engineer_project_spark.operators.native_codec as nc
-
-
-# ---------------------------------------------------------------- gate
-
-
-def test_registry_gate_prefix_draws_stale_q_and_regated_hq_rows(tmp_path):
-    """r12 verdict items 3+5: given the evidence state the round-13
-    gate ran against (rounds 1-12 only), the 50-slot prefix must
-    surface (a) the 13 TPC-H q-rows whose only driver green was round
-    1 and (b) >= 10 of the hq rows regated at round 13 (their last
-    green was round 4, eight rounds of shared-machinery churn ago).
-
-    EVERY ranking input is frozen as of the r13 gate: the evidence
-    files (an r1-r12 snapshot in a tmp dir — committed, immutable),
-    the name universe (the queries those files record — the live
-    registry grows every round), and the contract/regate cutoffs
-    (entries <= 13 only — later rounds add regates that would
-    otherwise rotate new zero-effective rows ahead of the q block).
-    The original version ranked the LIVE repo root and broke the
-    moment CORRECTNESS_r13.json landed; the first fix froze only the
-    evidence files and would have broken on ordinary catalog growth
-    (r14 review: the 13th q-row sat at slot 47 of 50)."""
-    import shutil
-    from pathlib import Path
-
-    from data_engineer_project_spark.queries import (
-        _CONTRACT_CHANGED_ROUND,
-        _REGATE_ROUND,
-        _green_counts_both,
-        rank_names,
-    )
-
-    repo_root = Path(__file__).resolve().parents[1]
-    names: set[str] = set()
-    for f in sorted(repo_root.glob("CORRECTNESS_r*.json")):
-        if int(f.stem.split("_r")[-1]) <= 12:
-            shutil.copy(f, tmp_path / f.name)
-            names.update(json.loads(f.read_text()))
-    frozen_cutoffs = {
-        n: r
-        for n in names
-        if (
-            r := max(
-                _CONTRACT_CHANGED_ROUND.get(n, 0), _REGATE_ROUND.get(n, 0)
-            )
-        )
-        <= 13
-    }
-    eff, hist, last = _green_counts_both(
-        repo_root=tmp_path, cutoffs=frozen_cutoffs
-    )
-    first50 = rank_names(sorted(names), eff, hist, last)[:50]
-    q_rows = [n for n in first50 if n[0] == "q"]
-    hq_rows = [n for n in first50 if n.startswith("hq")]
-    assert len(q_rows) == 13, q_rows
-    assert len(hq_rows) >= 10, hq_rows
-    # the round-1 p-rows the verdict names must be in the prefix too
-    for p in ("p33_", "p34_", "p42_", "p43_", "p44_"):
-        assert any(n.startswith(p) for n in first50), p
 
 
 # ------------------------------------------------- engine-tier boundary

@@ -115,6 +115,25 @@ def test_banded_sigs_arrow_matches_hof(spark):
         banded_lsh_sigs(emb, emb, engine="nope").collect()
 
 
+def test_banded_sigs_arrow_rejects_input_types_its_schema_would_cast(spark):
+    """The Arrow stage's output schema is ``vid long, vec array<float>``;
+    any other input type raises instead of being cast (an array<double>
+    vector would otherwise lose precision before the exact-cosine
+    verify)."""
+    from data_engineer_project_spark.operators.similarity import (
+        banded_lsh_sigs,
+    )
+
+    vec = [0.5] * 64
+    for schema, bad in (
+        ("vec_id long, embedding array<double>", "array<double>"),
+        ("vec_id int, embedding array<float>", "int"),
+    ):
+        df = spark.createDataFrame([(1, vec)], schema)
+        with pytest.raises(ValueError, match=bad):
+            banded_lsh_sigs(df, df, planes=4)
+
+
 def test_brute_force_topk_fanout_optin_identical_rows_and_plan_shape(
     spark, tmp_path
 ):

@@ -120,10 +120,13 @@ def main():
     from data_engineer_project_spark.queries import QUERIES
 
     if prefix_n is not None:
-        # the driver gates queries() in REGISTRY order, first N only —
-        # pre-flight exactly that slice (combinable with name filters)
+        # the driver gates the first N of queries() (gate order, see
+        # __spark_entry__) — pre-flight exactly that slice (combinable
+        # with name filters)
+        from __spark_entry__ import queries
+
         names = [
-            n for n in list(QUERIES)[:prefix_n]
+            n for n in list(queries())[:prefix_n]
             if not filters or any(f in n for f in filters)
         ]
     else:
