@@ -161,19 +161,11 @@ BENCH_QUERIES = [
     # diagnostic spot-check lane (r12 removes them from the headline;
     # their contracts stay driver-gated in the correctness sweep).
     "d89_weighted_pagerank_canonical",
-    # r12 addition: the NATIVE decode tier — m15's real-container
-    # contract driven through the per-worker JVM sidecar
-    # (operators/native_codec.py; bmp/png/gif through ImageIO,
-    # pgm/SOF3/tif Python fallback). Times the sidecar plumbing the
-    # 100 TB ingest path rides (the JPEG-dominated win is priced in
-    # SCALING.md's codec table; this slot keeps the pipe+fallback
-    # overhead visible at corpus scale).
-    "m21_native_container_decode",
     # r13 addition: the lossless-webp decode gate (WEBP.md landing) —
     # real VP8L containers per doc, prefix-code entropy decode +
     # palette inverse inside Arrow stages; times the one crawl format
-    # the JDK sidecar CANNOT serve (no ImageIO webp reader), i.e. the
-    # pure-Python entropy floor the deployment note prices against.
+    # the JDK has no ImageIO reader for, i.e. the pure-Python entropy
+    # floor the deployment note prices against.
     "m22_webp_lossless_decode",
     # r14 addition: the append-mode streaming media gate — VP8L
     # encode/damage/decode Arrow stages feeding a WATERMARKED tumbling
@@ -196,6 +188,30 @@ SPOT_CHECK_QUERIES = [
 ]
 
 
+def select_slots(only: str, include_spot: bool) -> list[str]:
+    """The slots to time. ``only`` is SPARK_GRAFT_BENCH_ONLY: empty for
+    every slot, else comma-separated name prefixes (triage/re-pin mode,
+    e.g. ``hq06,p62``, for idle-box min-of-N pins without paying the
+    full suite). ``include_spot`` adds the spot-check lane. Raises
+    ValueError on a slot that names no registered query and on a
+    prefix that matches no slot, before any Spark session starts."""
+    pool = list(BENCH_QUERIES)
+    if include_spot:
+        pool += SPOT_CHECK_QUERIES
+    unknown = [n for n in pool if n not in QUERIES]
+    if unknown:
+        raise ValueError(f"bench slots name unregistered queries: {unknown}")
+    prefixes = [p.strip() for p in only.split(",") if p.strip()]
+    if not prefixes:
+        return pool
+    unmatched = [p for p in prefixes if not any(n.startswith(p) for n in pool)]
+    if unmatched:
+        raise ValueError(
+            f"SPARK_GRAFT_BENCH_ONLY prefixes match no bench slot: {unmatched}"
+        )
+    return [n for n in pool if n.startswith(tuple(prefixes))]
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -208,6 +224,10 @@ def main() -> None:
     except ValueError:
         sf_num = 0.0
     os.environ.setdefault("SPARK_GRAFT_HC_MEMBERS", str(max(12, int(120_000 * sf_num))))
+    names = select_slots(
+        os.environ.get("SPARK_GRAFT_BENCH_ONLY", ""),
+        bool(os.environ.get("SPARK_GRAFT_BENCH_INCLUDE_SPOT", "").strip()),
+    )
     # Keep stdout machine-clean: the driver tail-captures stdout, and
     # Spark's console progress bar interleaves \r frames with the JSON
     # record (the proximate cause of BENCH_r07's unparseable tail).
@@ -235,20 +255,6 @@ def main() -> None:
         lambda it: it, "id long"
     ).count()
 
-    pool = list(BENCH_QUERIES)
-    if os.environ.get("SPARK_GRAFT_BENCH_INCLUDE_SPOT", "").strip():
-        pool += SPOT_CHECK_QUERIES
-    unknown = [n for n in pool if n not in QUERIES]
-    if unknown:
-        raise ValueError(f"bench slots name unregistered queries: {unknown}")
-    names = pool
-    # Triage/re-pin mode: run only the named slots (comma-separated
-    # prefixes), e.g. SPARK_GRAFT_BENCH_ONLY=hq06,p62 — used for
-    # idle-box min-of-N pins without paying the full suite.
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").strip()
-    if only:
-        prefixes = tuple(p.strip() for p in only.split(",") if p.strip())
-        names = [n for n in names if n.startswith(prefixes)]
     if any(n.startswith("s") for n in names):
         # Streaming-engine warmup (round-12 s01 triage): the FIRST
         # streaming queries in a session pay engine + state-store +
@@ -301,29 +307,6 @@ def main() -> None:
                     spark.catalog.dropTempView(f"bench_stream_warm_{_wi}")
                 except Exception:
                     pass
-    if any(n.startswith("m21") for n in names):
-        # Native-sidecar warmup (round 12, same rationale as the two
-        # warmups above): m21's first native decode on each Python
-        # worker spawns that worker's decoder JVM (~0.3-1 s, once per
-        # executor lifetime at 100 TB). Workers idled out between the
-        # 34 preceding slots respawn sidecars INSIDE the timed runs,
-        # which is how m21 measured 4.2 s at slot 35 of a loaded full
-        # run vs 2.1-2.2 s solo. One tiny engine=native pass primes a
-        # sidecar in every pooled worker right before timing starts.
-        import data_engineer_project_spark.operators.multimodal as _mm
-
-        _wdocs = spark.range(32).selectExpr(
-            "id AS doc_id", "'en' AS lang",
-            "cast(null as binary) AS media", "'png' AS media_format",
-        )
-        _png = _mm.encode_png(bytes(range(64)), 8)
-        from pyspark.sql import functions as _F
-
-        _mm.decode_media(
-            _wdocs.repartition(32).withColumn("media", _F.lit(_png)),
-            use_real_codec=True,
-            engine="native",
-        ).count()
     if any(n.startswith("hq") for n in names):
         # Pre-build fixture DataFrames so hq slots time ETL + query,
         # not the one-off driver-side row conversion (a parquet read in

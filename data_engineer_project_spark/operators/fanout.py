@@ -64,7 +64,7 @@ def fanout_small_scan(df: DataFrame) -> DataFrame:
     not work: a sub-128 MB parquet arrives as ONE split, so a
     per-payload codec stage after it runs on one core regardless of
     cluster size — the round-13 m22 closing run measured 9.2 s where
-    32-way decode costs ~1 s, and m15/m16/m21 carried the same shape.
+    32-way decode costs ~1 s, and m15/m16 carry the same shape.
     The guard makes this scale-correct: it only repartitions when the
     scan has FEWER partitions than the default parallelism, so at
     100 TB (thousands of input splits) it is a plan no-op and no

@@ -2861,34 +2861,13 @@ def encode_tiff_gray(pixels: bytes, width: int, packbits: bool = False) -> bytes
     return b"II\x2a\x00" + struct.pack("<I", ifd_off) + strip + ifd
 
 
-def _real_decode(payload: bytes, fmt: str, engine: str = "python") -> np.ndarray:
+def _real_decode(payload: bytes, fmt: str) -> np.ndarray:
     """Real codec path: dispatch on the payload's MAGIC bytes to the
-    dependency-free PNM/BMP/PNG/JPEG/GIF parsers above. webp (VP8)
-    remains a documented stub — its entropy codec is out of scope.
-
-    ``engine="native"`` (round 12) routes the decode DATA PLANE
-    through the JVM sidecar (operators/native_codec.py — ImageIO /
-    AudioSystem behind the same conventions) for the payloads its
-    proven coverage includes, falling back to the Python codecs for
-    everything else (SOF3/PNM/TIFF by design; any payload the native
-    tier rejects or can't reproduce conventions for). The Python
-    codecs remain the conformance oracle (pytest roundtrips) and the
-    STRICTNESS authority — integrity gates always use engine="python"
-    because ImageIO is lenient where these parsers raise (truncated
-    JPEG, CRC-lying PNG). That tier rule is ENFORCED in code, not just
-    documented: ``container_integrity`` rejects engine != "python" at
-    the gate boundary (round-13 review finding)."""
-    if engine not in ("python", "native"):
-        raise ValueError(f"unknown decode engine {engine!r}")
-    if engine == "native":
-        from data_engineer_project_spark.operators import native_codec
-
-        try:
-            a = native_codec.native_decode(payload)
-            if a is not None:
-                return a
-        except (RuntimeError, ValueError):
-            pass  # no sidecar / native rejection: Python decides
+    dependency-free PNM/BMP/PNG/JPEG/GIF/TIFF/WAV/WEBP parsers above.
+    Lossy webp (VP8) remains a documented stub — its entropy codec is
+    out of scope. These codecs are both the conformance reference
+    (pytest roundtrips) and the strictness authority: they raise on
+    truncated or CRC-lying payloads that lenient decoders accept."""
     if payload[:2] in (b"P5", b"P6"):
         return decode_pnm(payload)
     if payload[:2] == b"BM":
@@ -2920,15 +2899,8 @@ def fake_decode(payload: bytes) -> np.ndarray:
     return np.frombuffer(payload, dtype=np.uint8)
 
 
-def decode_media(
-    media: DataFrame, use_real_codec: bool = False, engine: str = "python"
-) -> DataFrame:
-    """Per-payload pixel stats via mapInPandas (Arrow batches in/out).
-
-    ``engine="native"`` decodes through the per-worker JVM sidecar
-    where coverage is proven bit-exact (see _real_decode) — the
-    100 TB ingest tier; results over the lossless fixture arms are
-    pinned identical to the Python engine."""
+def decode_media(media: DataFrame, use_real_codec: bool = False) -> DataFrame:
+    """Per-payload pixel stats via mapInPandas (Arrow batches in/out)."""
 
     def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -2946,7 +2918,7 @@ def decode_media(
                     # NULL/empty payload decodes to no pixels: emit no
                     # row, matching the oracle's per-byte unnest.
                     continue
-                a = _real_decode(m, f, engine) if use_real_codec else fake_decode(m)
+                a = _real_decode(m, f) if use_real_codec else fake_decode(m)
                 s = int(a.astype(np.int64).sum())
                 out["doc_id"].append(did)
                 out["lang"].append(lang)
@@ -3656,28 +3628,14 @@ _INTEGRITY_SCHEMA = StructType(
 )
 
 
-def container_integrity(media: DataFrame, engine: str = "python") -> DataFrame:
+def container_integrity(media: DataFrame) -> DataFrame:
     """Decode-level integrity gate over REAL containers (the m13
     metadata gate's deeper sibling): actually PARSE each payload with
     the PNM/BMP decoders and verify the pixel matrix matches the
     declared (width, height) metadata. Verdicts: 'ok' (parsed, dims
     agree), 'dim_mismatch' (parsed but wrong size), 'corrupt' (parser
     raised — truncated data, botched header), 'empty' (NULL payload).
-    One narrow Arrow stage; quarantine decisions never shuffle.
-
-    ``engine`` must be "python": the Python codecs are the strictness
-    authority and the native (ImageIO) tier is lenient — it accepts
-    truncated JPEG and CRC-lying PNG these parsers quarantine — so a
-    native-tier integrity gate would silently pass corrupt payloads.
-    Enforced here (not just in docstring convention) per the round-13
-    review; the native tier is for the INGEST data plane
-    (decode_media) only."""
-    if engine != "python":
-        raise ValueError(
-            "container_integrity requires engine='python': the native "
-            "(ImageIO) tier is lenient and would silently accept "
-            "payloads the strict Python parsers quarantine"
-        )
+    One narrow Arrow stage; quarantine decisions never shuffle."""
 
     def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -8,8 +8,7 @@ with the 2D distance map) and an encoder emitting a conformant simple
 subset (prefix-coded literals; gray input rides a COLOR_INDEXING
 palette exactly like real lossless-webp gray encodes). Lossy VP8
 payloads raise the same documented NotImplementedError class as
-arithmetic-coded JPEG — the rationale and the sidecar-plugin path for
-real deployments live in WEBP.md.
+arithmetic-coded JPEG — the rationale lives in WEBP.md.
 
 Format source: the public WebP lossless bitstream specification
 (RFC 9649); the reference repo has no webp support, so there is no
@@ -750,11 +749,9 @@ def decode_webp(payload: bytes) -> np.ndarray:
             return decode_vp8l(payload[pos + 8 : pos + 8 + ln])[0]
         if cid in (b"VP8 ", b"ALPH"):
             raise NotImplementedError(
-                "lossy (VP8) webp is a documented non-goal in this "
-                "environment — see WEBP.md (a full boolean-coder + "
-                "intra-prediction + loop-filter decode; real "
-                "deployments route it through the decode sidecar with "
-                "an ImageIO webp plugin on the executor classpath)"
+                "lossy (VP8) webp is a documented non-goal — see "
+                "WEBP.md (it needs a full boolean-coder + "
+                "intra-prediction + loop-filter decode)"
             )
         pos += 8 + ln + (ln & 1)
     raise ValueError("WEBP container has no VP8L chunk")

@@ -1040,15 +1040,8 @@ def m15_real_container_decode(t):
     stages (no shuffle); the only exchange is none at all — the result
     stays per-doc. Payload columns prune away for metadata-only
     readers as in m01."""
-    return _real_container_decode(t, engine="python")
-
-
-def _real_container_decode(t, engine: str):
-    """Shared body of m15 (engine=python) and m21 (engine=native): the
-    arm rotation and output shape are ONE definition so the two
-    driver gates can never silently diverge."""
     media = attach_real_media(t.documents)
-    dec = decode_media(media, use_real_codec=True, engine=engine)
+    dec = decode_media(media, use_real_codec=True)
     return dec.select(
         "doc_id",
         "lang",
@@ -1680,41 +1673,6 @@ def m20_wav_audio_neardup(t):
     )
 
 
-# m21's contract IS m15's: the native tier must recover the identical
-# pixel matrix from every container arm (bit-exact on the lossless
-# arms it serves; Python fallback on pgm/jpg-SOF3/tif), so the
-# container-blind oracle applies verbatim.
-_M21_ORACLE = _REGISTRY_M20["m15_real_container_decode"].oracle
-
-
-@query(
-    "m21_native_container_decode",
-    _M21_ORACLE,
-    tags=("multimodal", "decode", "native"),
-)
-def m21_native_container_decode(t):
-    """m15's real-container decode driven through the NATIVE data
-    plane (round 12 — the 100 TB ingest tier): decode_media with
-    ``engine="native"`` routes each payload through the per-worker
-    JVM sidecar (operators/native_codec.py — ImageIO behind the
-    Python codecs' exact output conventions) for the arms its proven
-    coverage includes (bmp, png, gif here), and falls back to the
-    pure-Python parsers for the rest (pgm header-walk, SOF3 lossless
-    JPEG — ImageIO has no reader for it — and tif by design). The
-    oracle is m15's verbatim: it recomputes the stats from the raw
-    UTF-8 bytes, so a hash match proves the native tier recovered
-    exactly the true pixel matrix — a band-order bug, a palette
-    expansion bug, or a gray-collapse mismatch in the sidecar
-    conventions turns the row red. If no JVM is reachable the whole
-    run degrades to the Python engine and still matches (pinned).
-
-    Scale shape: identical to m15 — two narrow Arrow mapInPandas
-    stages, no shuffle; the decode inner loop is ImageIO-native
-    (see SCALING.md codec table's native column). Body shared with
-    m15 (_real_container_decode) so the two gates cannot diverge."""
-    return _real_container_decode(t, engine="native")
-
-
 # ------------- m22: lossless webp (VP8L) through a real container
 
 
@@ -1759,10 +1717,7 @@ def m22_webp_lossless_decode(t):
 
     webp is the highest-volume crawl format the engine previously
     stubbed (WEBP.md cites the public share estimates); lossy VP8
-    remains the documented non-goal with the sidecar-plugin
-    deployment path. The JDK has no webp reader, so the native tier
-    never serves these payloads (native_decode declines; Python
-    decides) and there is deliberately no engine="native" twin.
+    remains the documented non-goal.
 
     Scale shape: identical to m15 — encode and decode are narrow
     Arrow mapInPandas stages, no shuffle, result stays per-doc."""

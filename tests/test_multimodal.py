@@ -319,6 +319,29 @@ def test_bmp_parser_topdown_and_rejections():
         _real_decode(b"\x89PNG....", "png")
 
 
+def test_bmp_decodes_palette_indices_not_colors():
+    """decode_bmp returns the raw 8-bit palette INDICES and never
+    expands through the palette: an inverted gray ramp decodes to the
+    same samples as the identity ramp the encoder writes."""
+    import struct
+
+    import numpy as np
+
+    from data_engineer_project_spark.operators.multimodal import (
+        decode_bmp,
+        encode_bmp8,
+    )
+
+    px = np.random.RandomState(4).randint(0, 256, 16 * 8).astype(np.uint8)
+    good = encode_bmp8(px.tobytes(), 16)
+    pal_off = 14 + struct.unpack_from("<I", good, 14)[0]
+    inv = bytearray(good)
+    for i in range(256):
+        inv[pal_off + 4 * i : pal_off + 4 * i + 3] = bytes([255 - i] * 3)
+    assert np.array_equal(decode_bmp(bytes(inv)), px)
+    assert np.array_equal(decode_bmp(good), px)
+
+
 def test_real_decode_agrees_with_stub_on_padded_pixels(spark, sf_dir):
     """Container-roundtrip invariance on real corpus data: decoding
     the PNM/BMP payloads must yield exactly the stats fake_decode

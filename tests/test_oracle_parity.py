@@ -25,8 +25,9 @@ from tools.check_correctness import TABLES, result_fingerprint
 
 from data_engineer_project_spark.queries import QUERIES
 
-# Operator families touched by the r14/r15 optimization rounds — their
-# members stay in the default oracle lane until a quiet round passes.
+# Operator families touched by the r14/r15 optimization rounds, and
+# queries whose bodies changed since — their members stay in the
+# default oracle lane until a quiet round passes.
 _RECENTLY_TOUCHED = {
     "d13_embedding_near_dup",
     "d16_ann_recall",
@@ -43,6 +44,7 @@ _RECENTLY_TOUCHED = {
     "d96_dedup_threshold_calibration",
     "d100_incremental_neardup_ingest",
     "m10_image_neardup_clusters",
+    "m15_real_container_decode",
     "s24_stream_neardup_probe",
     "s25_stream_cluster_maintenance",
 }

@@ -251,6 +251,29 @@ def test_gif_color_palette_with_gray_pixels_stays_rgb():
     assert frames[0][1] is False
 
 
+def test_native_gif_nongray_background_stays_rgb():
+    """_gif_walk ANDs the BACKGROUND fill color's grayness into the
+    collapse flag even when the first frame covers the canvas, so a
+    non-gray bg entry keeps the decode RGB although the frame
+    references only gray entries."""
+    import struct
+
+    import data_engineer_project_spark.operators.multimodal as mm
+
+    # GCT: entry 0 NON-gray (the background), entries 1-3 gray
+    gct = [(255, 0, 0), (10, 10, 10), (20, 20, 20), (30, 30, 30)]
+    out = bytearray(b"GIF89a")
+    out += struct.pack("<HH", 4, 4)
+    out += bytes([0x81, 0, 0])  # GCT present, 4 entries, bg index 0
+    out += bytes(v for rgb in gct for v in rgb)
+    out += b"\x2c" + struct.pack("<HHHH", 0, 0, 4, 4) + bytes([0x00, 8])
+    out += mm._gif_lzw_pack(bytes([1, 2, 3, 1] * 4))  # only GRAY entries used
+    out += b"\x3b"
+    got = mm.decode_gif(bytes(out))
+    assert got.size == 4 * 4 * 3  # stays RGB: bg entry is non-gray
+    assert tuple(got.reshape(4, 4, 3)[0, 0]) == (10, 10, 10)
+
+
 def test_streaming_plancap_captures_microbatch_plan(spark):
     """r11 verdict item 6: the streaming bench slots carry DIRECT
     micro-batch plan evidence — grab_stream records the finished
@@ -274,213 +297,7 @@ def test_streaming_plancap_captures_microbatch_plan(spark):
     assert "REQUIRED_BY_STATEFUL_OPERATOR" in plan
 
 
-# ---------------------------------------------------------------- native tier
-
-
-def _native_or_skip():
-    import data_engineer_project_spark.operators.native_codec as nc
-
-    if not nc.native_available():
-        pytest.skip("no JVM available for the native decode tier")
-    return nc
-
-
-def test_native_codec_bit_exact_on_lossless_arms():
-    """The native tier's proven coverage is BIT-EXACT with the Python
-    codecs on the lossless arms — the property that makes m21 safe to
-    driver-gate with m15's oracle. Random payloads over several
-    shapes, all conventions (gray collapse, palette expansion, alpha
-    drop, interlace, 16-bit WAV sample map)."""
-    import struct
-
-    import numpy as np
-
-    import data_engineer_project_spark.operators.multimodal as mm
-
-    nc = _native_or_skip()
-    rng = np.random.RandomState(42)
-    for w, h in ((8, 8), (64, 24), (51, 37), (256, 128)):
-        px = rng.randint(0, 256, w * h).astype(np.uint8).tobytes()
-        for enc, dec in (
-            (lambda p: mm.encode_png(p, w), mm.decode_png),
-            (lambda p: mm.encode_gif(p, w), mm.decode_gif),
-            (lambda p: mm.encode_gif(p, w, interlace=True), mm.decode_gif),
-            (lambda p: mm.encode_bmp8(p, w), mm.decode_bmp),
-            (lambda p: mm.encode_wav_pcm8(p), mm.decode_wav),
-        ):
-            payload = enc(px)
-            a, b = dec(payload), nc.native_decode(payload)
-            assert b is not None and np.array_equal(a, b), (w, h, dec.__name__)
-    # 16-bit WAV: the (v + 32768) >> 8 sample map must match
-    samp = rng.randint(-32768, 32768, 999).astype("<i2").tobytes()
-    wav = (
-        b"RIFF"
-        + struct.pack("<I", 36 + len(samp) + 1)
-        + b"WAVEfmt "
-        + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 16000, 2, 16)
-        + b"data"
-        + struct.pack("<I", len(samp))
-        + samp
-        + b"\x00"
-    )
-    assert np.array_equal(mm.decode_wav(wav), nc.native_decode(wav))
-
-
-def test_native_codec_jpeg_tolerance_and_fallbacks():
-    """JPEG SOF0/SOF2 native decode agrees within IDCT rounding (±2 at
-    all-ones quant) — the ingest tier's documented tolerance, NEVER
-    serving an oracle; SOF3 / PNM / TIFF return None (Python-only by
-    design); a partial-canvas first GIF frame returns None (Python
-    must composite onto the background-filled canvas)."""
-    import struct
-
-    import numpy as np
-
-    import data_engineer_project_spark.operators.multimodal as mm
-
-    nc = _native_or_skip()
-    rng = np.random.RandomState(9)
-    px = rng.randint(0, 256, 48 * 32).astype(np.uint8).tobytes()
-    for enc in (mm.encode_jpeg_baseline, mm.encode_jpeg_progressive):
-        p = enc(px, 48)
-        a, b = mm.decode_jpeg(p), nc.native_decode(p)
-        assert b is not None and len(a) == len(b)
-        assert int(np.abs(a.astype(int) - b.astype(int)).max()) <= 2
-    assert nc.native_decode(mm.encode_jpeg_lossless(px, 48)) is None
-    assert nc.native_decode(mm.encode_pnm(px, 48)) is None
-    assert nc.native_decode(mm.encode_tiff_gray(px, 48)) is None
-    # partial-canvas first frame: peek rejects, Python composites
-    g = bytearray(mm.encode_gif(px, 48))
-    # the image descriptor sits right after header (13) + GCT (768)
-    desc = 13 + 768
-    assert g[desc] == 0x2C
-    g[desc + 1 : desc + 9] = struct.pack("<HHHH", 1, 1, 2, 2)
-    assert nc.native_decode(bytes(g)) is None
-
-
-def test_native_gif_color_palette_matches_python():
-    """A color-palette full-canvas GIF decodes identically through
-    both engines: native expands through the exact color map and the
-    peek's palette-gray verdict matches _gif_walk's (round-12 palette
-    keying) — including the gray-used-pixels-in-color-palette case."""
-    import struct
-
-    import numpy as np
-
-    import data_engineer_project_spark.operators.multimodal as mm
-
-    nc = _native_or_skip()
-    gct = [(10, 10, 10), (200, 200, 200), (255, 0, 0), (0, 0, 255)]
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HH", 4, 4)
-    out += bytes([0x81, 0, 0])
-    out += bytes(v for rgb in gct for v in rgb)
-    out += b"\x2c" + struct.pack("<HHHH", 0, 0, 4, 4) + bytes([0x00, 8])
-    out += mm._gif_lzw_pack(bytes([0, 1, 2, 3] * 4))
-    out += b"\x3b"
-    a, b = mm.decode_gif(bytes(out)), nc.native_decode(bytes(out))
-    assert b is not None and np.array_equal(a, b) and a.size == 4 * 4 * 3
-
-
-def test_decode_media_native_matches_python(spark):
-    """The full Spark surface: decode_media over the real-container
-    corpus is row-identical between engines (native serves bmp/png/
-    gif; pgm/jpg-SOF3/tif fall back) — the exact equality m21's
-    driver gate relies on."""
-    from data_engineer_project_spark.operators.multimodal import (
-        attach_real_media,
-        decode_media,
-    )
-    from data_engineer_project_spark.queries.catalog import load_tables
-
-    _native_or_skip()
-    t = load_tables(spark, "/root/testdata/sf0.001")
-    media = attach_real_media(t.documents)
-    a = sorted(
-        decode_media(media, use_real_codec=True).collect(),
-        key=lambda r: r.doc_id,
-    )
-    b = sorted(
-        decode_media(media, use_real_codec=True, engine="native").collect(),
-        key=lambda r: r.doc_id,
-    )
-    assert a == b and len(a) > 0
-
-
-def test_native_engine_degrades_to_python_without_jvm(monkeypatch):
-    """No JVM (or a dead sidecar) must never change results: the
-    native engine falls back to the Python codecs payload-by-payload."""
-    import numpy as np
-
-    import data_engineer_project_spark.operators.multimodal as mm
-    import data_engineer_project_spark.operators.native_codec as nc
-
-    monkeypatch.setattr(nc, "_ensure_compiled", lambda: None)
-    monkeypatch.setattr(nc, "_SIDECAR", nc._Sidecar())
-    rng = np.random.RandomState(3)
-    px = rng.randint(0, 256, 64 * 24).astype(np.uint8).tobytes()
-    p = mm.encode_png(px, 64)
-    assert np.array_equal(
-        mm._real_decode(p, "png", engine="native"), mm.decode_png(p)
-    )
-
-
 # ------------------------------------------------- round-12 review findings
-
-
-def test_native_bmp_only_identity_palette():
-    """decode_bmp returns raw palette INDICES (never expands), so the
-    native tier may serve a BMP only when the palette is the identity
-    gray ramp — an inverted gray ramp or color palette must route to
-    Python (review finding: anything else silently diverges)."""
-    import struct
-
-    import numpy as np
-
-    import data_engineer_project_spark.operators.multimodal as mm
-
-    nc = _native_or_skip()
-    rng = np.random.RandomState(4)
-    px = rng.randint(0, 256, 16 * 8).astype(np.uint8).tobytes()
-    good = bytearray(mm.encode_bmp8(px, 16))
-    assert nc.native_decode(bytes(good)) is not None
-
-    # find the palette via the header (14 + dib_size), invert the ramp
-    dib = struct.unpack_from("<I", good, 14)[0]
-    pal_off = 14 + dib
-    inv = bytearray(good)
-    for i in range(256):
-        inv[pal_off + 4 * i : pal_off + 4 * i + 3] = bytes([255 - i] * 3)
-    assert nc.native_decode(bytes(inv)) is None
-    # Python still decodes indices identically for both payloads
-    assert np.array_equal(mm.decode_bmp(bytes(inv)), mm.decode_bmp(bytes(good)))
-
-
-def test_native_gif_nongray_background_stays_rgb():
-    """_gif_walk ANDs the BACKGROUND fill color's grayness into the
-    collapse flag even when the first frame covers the canvas; the
-    native peek must mirror that (review finding), so a non-gray bg
-    entry keeps both engines RGB and equal."""
-    import struct
-
-    import numpy as np
-
-    import data_engineer_project_spark.operators.multimodal as mm
-
-    nc = _native_or_skip()
-    # GCT: entry 0 NON-gray (the background), entries 1-3 gray
-    gct = [(255, 0, 0), (10, 10, 10), (20, 20, 20), (30, 30, 30)]
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HH", 4, 4)
-    out += bytes([0x81, 0, 0])  # GCT present, 4 entries, bg index 0
-    out += bytes(v for rgb in gct for v in rgb)
-    out += b"\x2c" + struct.pack("<HHHH", 0, 0, 4, 4) + bytes([0x00, 8])
-    out += mm._gif_lzw_pack(bytes([1, 2, 3, 1] * 4))  # only GRAY entries used
-    out += b"\x3b"
-    a = mm.decode_gif(bytes(out))
-    assert a.size == 4 * 4 * 3  # python stays RGB: bg entry is non-gray
-    b = nc.native_decode(bytes(out))
-    assert b is not None and np.array_equal(a, b)
 
 
 def test_probe_verdict_cache_never_caches_inmemory_frames(spark):
@@ -528,24 +345,6 @@ def test_plan_identity_not_truncated_by_tostring_limit(spark, tmp_path):
     assert (
         spark.conf.get("spark.sql.debug.maxToStringFields", "25") != "1000000"
     )
-
-
-def test_sidecar_goes_dead_after_three_zero_service_strikes(monkeypatch):
-    """A JVM that launches but dies before serving anything (e.g. an
-    argv the local runtime can't execute) must not be respawned per
-    payload: three zero-service pipe losses mark the sidecar dead and
-    the engine degrades to Python once (review finding)."""
-    import data_engineer_project_spark.operators.native_codec as nc
-
-    monkeypatch.setattr(nc, "_ensure_compiled", lambda: ["/bin/cat", "/dev/null"])
-    sc = nc._Sidecar()
-    for i in range(3):
-        with pytest.raises(RuntimeError):
-            sc.decode(b"I", b"xx")
-    assert sc._dead is True
-    # fourth attempt: no spawn, immediate unavailable
-    with pytest.raises(RuntimeError):
-        sc.decode(b"I", b"xx")
 
 
 def test_plan_identity_none_for_broken_frame(spark):

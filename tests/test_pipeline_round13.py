@@ -1,212 +1,9 @@
-"""Round-13 pins: the native tier's strictness acceptance envelope,
-the code-enforced engine-tier boundary, and the concurrency/robustness
-fixes from the round-12 advice (plan_identity render lock,
-ExternalRDD leaf guard, sidecar desync cleanup).
-
-Context (r12 verdict item 6): the native (ImageIO/AudioSystem) decode
-tier is LENIENT where the Python codecs — the strictness authority —
-quarantine: measured round 13, ImageIO accepted a CRC-lying PNG and
-AudioSystem a truncated WAV data chunk. Round 13 closes both gaps
-client-side (chunk-CRC walk in _peek_png, structural chunk walk in the
-WAV branch) so every payload Python rejects now routes BACK to Python
-(native_decode returns None) instead of silently passing the native
-tier; the fuzz test here pins that envelope.
+"""Round-13 pins: the concurrency/robustness fixes from the round-12
+advice (plan_identity render lock, ExternalRDD leaf guard) and the
+small-scan fan-out guard for per-payload codec stages.
 """
 
 from __future__ import annotations
-
-import struct
-
-import numpy as np
-import pytest
-
-import data_engineer_project_spark.operators.multimodal as mm
-import data_engineer_project_spark.operators.native_codec as nc
-
-
-# ------------------------------------------------- engine-tier boundary
-
-
-def test_container_integrity_rejects_native_engine(spark):
-    """The integrity gate is the STRICTNESS consumer: the native tier
-    (lenient ImageIO) must be rejected in code, not by docstring
-    convention (r12 advice)."""
-    docs = spark.createDataFrame(
-        [(1, "png", b"x", 1, 1)],
-        "doc_id long, media_format string, media binary, "
-        "width int, height int",
-    )
-    with pytest.raises(ValueError, match="engine='python'"):
-        mm.container_integrity(docs, engine="native")
-
-
-def test_real_decode_rejects_unknown_engine():
-    with pytest.raises(ValueError, match="unknown decode engine"):
-        mm._real_decode(b"P5 1 1 255 x", "pgm", engine="turbo")
-
-
-# ------------------------------------------- strictness envelope (fuzz)
-
-
-def _py_verdict(payload: bytes, fmt: str) -> str:
-    try:
-        mm._real_decode(bytes(payload), fmt)
-        return "accept"
-    except Exception:
-        return "reject"
-
-
-def _native_verdict(payload: bytes):
-    """'accept' (with the array), 'fallback' (None — Python decides),
-    or 'reject' (native decoder raised)."""
-    try:
-        a = nc.native_decode(bytes(payload))
-    except Exception:
-        return "reject", None
-    return ("accept", a) if a is not None else ("fallback", None)
-
-
-def _flip_png_chunk_crc(p: bytes, chunk: bytes) -> bytes:
-    i = p.find(chunk)
-    assert i > 0
-    ln = struct.unpack(">I", p[i - 4 : i])[0]
-    b = bytearray(p)
-    b[i + 4 + ln] ^= 0xFF
-    return bytes(b)
-
-
-def _gif_lzw_section(gif: bytes) -> tuple[int, int]:
-    """[start, end) byte extent of the image-data section (the
-    min-code-size byte through the last data sub-block, before the
-    block terminator) — the entropy-coded bytes of a single-frame
-    GIF."""
-    pos = 13
-    packed = gif[10]
-    if packed & 0x80:
-        pos += 3 * (2 << (packed & 7))
-    while gif[pos] == 0x21:
-        pos += 2
-        while gif[pos] != 0:
-            pos += 1 + gif[pos]
-        pos += 1
-    assert gif[pos] == 0x2C
-    pos += 10
-    if gif[pos - 1] & 0x80:
-        pos += 3 * (2 << (gif[pos - 1] & 7))
-    start = pos
-    end = pos + 1
-    while gif[end] != 0:
-        end += 1 + gif[end]
-    return start, end
-
-
-@pytest.mark.skipif(not nc.native_available(), reason="no JVM sidecar")
-def test_native_strictness_envelope_fuzz():
-    """r12 verdict item 6: on the bit-exact arms (png/gif/bmp/wav) a
-    corrupted payload the strict Python parser quarantines must NEVER
-    silently pass the native tier — it must fall back (None) or raise.
-    Deterministic corruption sweep: truncation at every 16th offset,
-    single-byte flips at every 7th offset, plus the two measured r13
-    leak shapes (CRC-lying PNG, tail-cut WAV). When BOTH engines
-    accept a fuzzed payload, the decoded values must stay bit-equal
-    (these arms are the bit-exact tier).
-
-    ONE documented per-arm exception (measured round 13: exactly 35/870
-    flip offsets, all inside the LZW data section, zero structural):
-    GIF corruption INSIDE the entropy-coded LZW stream (a code pointing
-    at an undefined dictionary entry, output overrunning the declared
-    frame) is detectable only by running the LZW decode itself — which
-    is the exact work the native tier exists to avoid — so ImageIO may
-    leniently accept what decode_gif quarantines THERE. Everything
-    structural (headers, palettes, descriptors, sub-block framing,
-    truncation, trailers) has full verdict parity, enforced by the
-    client-side peeks. The integrity gate (m16) is pinned to
-    engine="python" in code, so the lenient window never reaches a
-    strictness consumer."""
-    px = bytes(range(64))
-    arms = {
-        "png": mm.encode_png(px, 8),
-        "bmp": mm.encode_bmp8(px, 8),
-        "gif": mm.encode_gif(px, 8),
-        "wav": mm.encode_wav_pcm8(px),
-    }
-    lzw_lo, lzw_hi = _gif_lzw_section(arms["gif"])
-    leaks: list[str] = []
-    for fmt, clean in arms.items():
-        variants: list[tuple[str, int | None, bytes]] = []
-        for cut in range(4, len(clean), 16):
-            variants.append((f"trunc@{cut}", None, clean[:cut]))
-        for off in range(0, len(clean), 7):
-            b = bytearray(clean)
-            b[off] ^= 0xA5
-            variants.append((f"flip@{off}", off, bytes(b)))
-        if fmt == "png":
-            for chunk in (b"IHDR", b"IDAT", b"IEND"):
-                variants.append(
-                    (f"crc_lie:{chunk.decode()}", None,
-                     _flip_png_chunk_crc(clean, chunk))
-                )
-        if fmt == "wav":
-            variants.append(("tail_cut", None, clean[:-3]))
-        for label, flip_off, payload in variants:
-            py = _py_verdict(payload, fmt)
-            nat, arr = _native_verdict(payload)
-            if py == "reject" and nat == "accept":
-                if (
-                    fmt == "gif"
-                    and flip_off is not None
-                    and lzw_lo <= flip_off < lzw_hi
-                ):
-                    continue  # the documented LZW-stream exception
-                leaks.append(f"{fmt}:{label}")
-            elif py == "accept" and nat == "accept":
-                ref = mm._real_decode(bytes(payload), fmt)
-                if not np.array_equal(ref, arr):
-                    leaks.append(f"{fmt}:{label} (value mismatch)")
-    assert not leaks, f"native tier leniency leaks: {leaks}"
-
-
-@pytest.mark.skipif(not nc.native_available(), reason="no JVM sidecar")
-def test_native_wav_structural_strictness():
-    """Hand-built structural lies decode_wav quarantines must route to
-    Python: data-before-fmt, odd 16-bit data length, chunk-length lie."""
-    # data chunk before any fmt chunk
-    body = b"data" + struct.pack("<I", 4) + b"abcd"
-    p = b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
-    assert _py_verdict(p, "wav") == "reject"
-    assert _native_verdict(p)[0] in ("fallback", "reject")
-    # 16-bit PCM with an odd data length
-    fmt16 = b"fmt " + struct.pack("<I", 16) + struct.pack(
-        "<HHIIHH", 1, 1, 8000, 16000, 2, 16
-    )
-    data = b"data" + struct.pack("<I", 5) + b"abcde"
-    p = b"RIFF" + struct.pack("<I", 4 + len(fmt16) + len(data)) + b"WAVE" + fmt16 + data
-    assert _py_verdict(p, "wav") == "reject"
-    assert _native_verdict(p)[0] in ("fallback", "reject")
-    # declared data length overruns the payload
-    good = mm.encode_wav_pcm8(bytes(range(16)))
-    i = good.find(b"data")
-    lied = bytearray(good)
-    lied[i + 4 : i + 8] = struct.pack("<I", 1 << 20)
-    assert _py_verdict(bytes(lied), "wav") == "reject"
-    assert _native_verdict(bytes(lied))[0] in ("fallback", "reject")
-
-
-@pytest.mark.skipif(not nc.native_available(), reason="no JVM sidecar")
-def test_native_clean_payloads_still_served_natively():
-    """The strictness checks must not push CLEAN payloads off the
-    native tier: all four bit-exact arms still decode natively and
-    bit-equal to Python."""
-    px = bytes(range(64))
-    for fmt, payload in (
-        ("png", mm.encode_png(px, 8)),
-        ("bmp", mm.encode_bmp8(px, 8)),
-        ("gif", mm.encode_gif(px, 8)),
-        ("wav", mm.encode_wav_pcm8(px)),
-    ):
-        nat, arr = _native_verdict(payload)
-        assert nat == "accept", fmt
-        assert np.array_equal(arr, mm._real_decode(payload, fmt)), fmt
 
 
 # ------------------------------------------------------ leaf guard
@@ -285,80 +82,6 @@ def test_plan_identity_concurrent_renders_stable(spark, tmp_path):
     )
 
 
-# ----------------------------------------------------- sidecar desync
-
-
-def test_sidecar_kills_jvm_on_unexpected_exception(monkeypatch):
-    """r12 advice: an exception OUTSIDE the pipe-error set (e.g.
-    MemoryError between request write and response read) leaves the
-    pipe desynced; the protocol has no resync framing, so the sidecar
-    must kill the JVM (next call respawns) instead of letting the next
-    request misparse stale response bytes."""
-    sc = nc._Sidecar()
-
-    class _Boom:
-        def write(self, *_a):
-            return None
-
-        def flush(self):
-            raise MemoryError("mid-protocol")
-
-    class _P:
-        stdin = _Boom()
-        stdout = None
-        killed = False
-
-        def poll(self):
-            return None
-
-        def kill(self):
-            _P.killed = True
-
-    monkeypatch.setattr(sc, "_start", lambda: True)
-    sc._proc = _P()
-    with pytest.raises(MemoryError):
-        sc.decode(b"I", b"xx")
-    assert _P.killed is True
-    assert sc._proc is None
-
-
-def test_sidecar_server_rejection_keeps_jvm(monkeypatch):
-    """A ValueError (server-reported decode failure) means the full
-    error response WAS consumed — the pipe is in sync and the JVM must
-    survive for the next payload."""
-    import io
-
-    sc = nc._Sidecar()
-    resp = struct.pack(">i", 1) + struct.pack(">i", 3) + b"bad"
-
-    class _In:
-        @staticmethod
-        def write(*_a):
-            return None
-
-        @staticmethod
-        def flush():
-            return None
-
-    class _P:
-        stdin = _In()
-        stdout = io.BytesIO(resp)
-        killed = False
-
-        def poll(self):
-            return None
-
-        def kill(self):
-            _P.killed = True
-
-    monkeypatch.setattr(sc, "_start", lambda: True)
-    sc._proc = _P()
-    with pytest.raises(ValueError, match="native decode failed: bad"):
-        sc.decode(b"I", b"xx")
-    assert _P.killed is False
-    assert sc._proc is not None
-
-
 # ------------------------------------------------- small-scan fan-out
 
 
@@ -389,3 +112,38 @@ def test_fanout_small_scan_guard(spark, tmp_path):
     same = fanout_small_scan(wide)
     # no repartition added: the plan object is returned unchanged
     assert same is wide
+
+
+# --------------------------------------------- WAV structural strictness
+
+
+def test_native_wav_structural_strictness():
+    """Hand-built structural lies decode_wav must quarantine rather
+    than guess at: data before fmt, an odd 16-bit data length, and a
+    declared data length past the payload end."""
+    import struct
+
+    import pytest
+
+    import data_engineer_project_spark.operators.multimodal as mm
+
+    # data chunk before any fmt chunk
+    body = b"data" + struct.pack("<I", 4) + b"abcd"
+    p = b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
+    with pytest.raises(ValueError, match="before fmt"):
+        mm.decode_wav(p)
+    # 16-bit PCM with an odd data length
+    fmt16 = b"fmt " + struct.pack("<I", 16) + struct.pack(
+        "<HHIIHH", 1, 1, 8000, 16000, 2, 16
+    )
+    data = b"data" + struct.pack("<I", 5) + b"abcde\x00"
+    p = b"RIFF" + struct.pack("<I", 4 + len(fmt16) + len(data)) + b"WAVE" + fmt16 + data
+    with pytest.raises(ValueError, match="odd"):
+        mm.decode_wav(p)
+    # declared data length overruns the payload
+    good = mm.encode_wav_pcm8(bytes(range(16)))
+    i = good.find(b"data")
+    lied = bytearray(good)
+    lied[i + 4 : i + 8] = struct.pack("<I", 1 << 20)
+    with pytest.raises(ValueError, match="truncated"):
+        mm.decode_wav(bytes(lied))

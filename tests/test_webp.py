@@ -551,19 +551,11 @@ def test_encoder_rejects_oversized_and_empty_input():
         encode_webp_lossless_rgb(b"", 5)
 
 
-def _nc_available():
-    import data_engineer_project_spark.operators.native_codec as nc
-
-    return nc.native_available()
-
-
-@pytest.mark.skipif(not _nc_available(), reason="no JVM sidecar")
 def test_wav_peek_last_fmt_wins_like_decode_wav():
-    """Review finding: the native WAV peek honored the FIRST fmt chunk
-    while decode_wav honors the LAST before data (and rejects ANY
-    non-PCM fmt) — both divergences must route to Python."""
+    """decode_wav honors the LAST fmt chunk before data (two PCM fmts:
+    the later one sets the sample map) and rejects ANY non-PCM fmt
+    before data, even when an earlier fmt was PCM."""
     import data_engineer_project_spark.operators.multimodal as mm
-    import data_engineer_project_spark.operators.native_codec as nc
 
     def wav(chunks):
         body = b"".join(chunks)
@@ -574,21 +566,14 @@ def test_wav_peek_last_fmt_wins_like_decode_wav():
             "<HHIIHH", tag, 1, 8000, 8000, 1, bits
         )
 
+    # two PCM fmts, 8-bit then 16-bit: decode_wav uses the 16-bit map
+    v = np.array([-32768, 32767], dtype="<i2").tobytes()
+    data16 = b"data" + struct.pack("<I", len(v)) + v
+    assert list(mm.decode_wav(wav([fmt(1, 8), fmt(1, 16), data16]))) == [0, 255]
+    # second fmt non-PCM: decode_wav quarantines
     data = b"data" + struct.pack("<I", 4) + bytes([1, 2, 3, 4])
-    # two PCM fmts, 8-bit then 16-bit: decode_wav uses 16-bit map
-    both = wav([fmt(1, 8), fmt(1, 16), data])
-    ref = mm.decode_wav(both)
-    nat = nc.native_decode(both)
-    assert nat is None or np.array_equal(nat, ref)
-    # second fmt non-PCM: decode_wav quarantines; native must not accept
-    bad = wav([fmt(1, 8), fmt(2, 8), data])
-    with pytest.raises(NotImplementedError):
-        mm.decode_wav(bad)
-    try:
-        out = nc.native_decode(bad)
-    except (RuntimeError, ValueError):
-        out = None
-    assert out is None
+    with pytest.raises(NotImplementedError, match="PCM"):
+        mm.decode_wav(wav([fmt(1, 8), fmt(2, 8), data]))
 
 
 # ----------------- round-14 combinatorial vectors (r13 verdict #6):

@@ -4,13 +4,8 @@ min-of-5 batches of 60 reps) for every container arm. These codecs run
 inside Arrow mapInPandas stages, so per-executor throughput multiplies
 by cores and this is the per-core decode budget at 100 TB ingest.
 
-Round 12 adds the NATIVE column: the same payloads decoded through
-the per-worker JVM sidecar (operators/native_codec.py — ImageIO /
-AudioSystem). The native tier pays a fixed pipe round-trip per
-payload (~50-100 us), so it is measured at BOTH the 1.5 KB fixture
-size and a 128 KB ingest-realistic size — the latter is the number
-that matters at 100 TB (crawl images are 10s-100s of KB). Arms the
-native tier deliberately doesn't cover (pgm, tif, SOF3) print "-".
+It prints the table at the 1.5 KB fixture size and at a 128 KB
+ingest-realistic size (crawl images are 10s-100s of KB).
 
 Usage: python tools/codec_bench.py
 """
@@ -66,9 +61,7 @@ def _arms(px: bytes, w: int):
             lambda: mm.encode_jpeg_progressive(px, w),
             mm.decode_jpeg,
         ),
-        # r13: lossless webp (operators/vp8l.py, WEBP.md). The native
-        # column prints "-" by construction: the JDK has no webp
-        # reader, so this arm IS the engine's webp floor.
+        # r13: lossless webp (operators/vp8l.py, WEBP.md).
         (
             "webp lossless (VP8L)",
             lambda: _vp8l().encode_webp_lossless(px, w),
@@ -84,16 +77,13 @@ def _vp8l():
 
 
 def _table(px: bytes, w: int, reps: int, with_encode: bool) -> None:
-    import data_engineer_project_spark.operators.native_codec as nc
-
-    have_native = nc.native_available()
     hdr = "| arm |"
     sep = "|---|"
     if with_encode:
         hdr += " encode ms |"
         sep += "---|"
-    hdr += " decode ms | decode MB/s (per core) | native ms | native MB/s | speedup |"
-    sep += "---|---|---|---|---|"
+    hdr += " decode ms | decode MB/s (per core) |"
+    sep += "---|---|"
     print(hdr)
     print(sep)
     for name, enc, dec in _arms(px, w):
@@ -104,20 +94,6 @@ def _table(px: bytes, w: int, reps: int, with_encode: bool) -> None:
             row += f" {_t(enc, reps=reps):.3f} |"
         dec_ms = _t(lambda: dec(payload), reps=reps)
         row += f" {dec_ms:.3f} | {_mbs(len(payload), dec_ms)} |"
-        nat = None
-        if have_native:
-            try:
-                nat = nc.native_decode(payload)
-            except (RuntimeError, ValueError):
-                nat = None
-        if nat is None:
-            row += " - | - | - |"
-        else:
-            nat_ms = _t(lambda: nc.native_decode(payload), reps=reps)
-            row += (
-                f" {nat_ms:.3f} | {_mbs(len(payload), nat_ms)} |"
-                f" {dec_ms / nat_ms:.1f}x |"
-            )
         print(row)
 
 
@@ -127,7 +103,7 @@ def main() -> None:
     print()
     _table(rng.randint(0, 256, 64 * 24).astype(np.uint8).tobytes(), 64, 60, True)
     print()
-    print("Ingest payload (512x256 gray, 128 KB — the 100 TB-realistic size):")
+    print("Ingest payload (512x256 gray, 128 KB):")
     print()
     _table(
         rng.randint(0, 256, 512 * 256).astype(np.uint8).tobytes(), 512, 10, False
