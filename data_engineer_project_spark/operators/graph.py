@@ -18,28 +18,38 @@ propagation would exhaust its round budget and silently mislabel;
 with jumping, 20 rounds cover any diameter up to ~2²⁰, and running
 out anyway RAISES rather than returning unconverged labels.
 
-The driver-side loop only checks a scalar convergence checksum per
-round; all data movement is distributed. ``localCheckpoint`` truncates
-the lineage each round so the plan does not grow with iterations.
+Cost model: under AQE every exchange runs as a Spark job of its own
+when a plan executes, so on bench-scale graphs a round costs its jobs,
+not its data (~0.9 s per round on d99's ~60-edge graph with two
+actions per round). Even ``localCheckpoint(eager=False)`` runs all of
+a round's shuffle stages when it is called, and a checksum
+``collect()`` after it would be a second action of two more jobs. So
+each round is ONE action: its label table is checkpointed eagerly, and
+the exact ``decimal(38,0)`` label sum — the convergence probe,
+strictly monotone until the fixpoint because labels only decrease —
+rides on that action as an ``Observation`` (after a lazy checkpoint
+Spark 4.1 reports the observed sum as None). Round 1 needs no
+identity-label table: it is the edge table's own
+``groupBy(e_src).min(e_dst)``. Convergence is tested from round 2 on,
+so an edge set whose round 1 changes no label (empty, or self-loops
+only) reports 2 rounds.
 
-Shuffle layout (r14, guide §2.4): the undirected edge set is
+Shuffle layout (guide §2.4): the undirected edge set is
 hash-partitioned by ``e_src`` ONCE, up front, and persisted that way.
-Every round's neighbor join then reuses that partitioning — only the
-node-sized label table moves per round — where the previous layout
-(partitioned by (e_src, e_dst) as a side effect of ``distinct``)
-re-exchanged the whole edge set inside EVERY round. The dedup still
-costs exactly one exchange: ``repartition(e_src)`` followed by
-``dropDuplicates([e_src, e_dst])`` plans the aggregate WITHOUT its own
-exchange because hash(e_src) already clusters equal (e_src, e_dst)
+Round 1's groupBy and every later round's neighbor join reuse that
+partitioning — only the node-sized label table moves per round. The
+dedup costs no exchange of its own: ``repartition(e_src)`` followed by
+``dropDuplicates([e_src, e_dst])`` plans the aggregate on the existing
+partitioning because hash(e_src) already clusters equal (e_src, e_dst)
 rows. Callers whose pair set has no duplicate unordered pairs, no
 self-loops and one orientation per pair by construction (verified
 near-dup pairs) pass ``pairs_unique=True`` and skip the dedup aggregate
-entirely — the mirrored union of such pairs cannot contain duplicates.
+entirely — the mirrored edges of such pairs cannot contain duplicates.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from data_engineer_project_spark.operators import plancap
@@ -54,6 +64,21 @@ LAST_RUN_STATS: dict = {}
 _INTEGRAL_ID_TYPES = ("byte", "short", "integer", "long", "decimal")
 
 
+def _require_integral_ids(df: DataFrame, cols) -> None:
+    # The convergence probe sums labels as decimal; a non-numeric id
+    # type would cast to NULL, make every checksum None, and stop the
+    # loop after round 2 with wrong components. Enforce the contract
+    # instead of silently mislabeling (string ids: map to dense ints
+    # first, e.g. xxhash64 or a zipWithIndex-style dimension).
+    for col in cols:
+        id_type = df.schema[col].dataType.typeName()
+        if id_type not in _INTEGRAL_ID_TYPES:
+            raise ValueError(
+                f"connected_components requires integral node ids, got "
+                f"{id_type} for {col!r}"
+            )
+
+
 def connected_components_from_edges(
     und: DataFrame, max_iter: int = 20
 ) -> DataFrame:
@@ -64,54 +89,38 @@ def connected_components_from_edges(
     materialization).
 
     ``und`` must have columns ``e_src``/``e_dst`` with BOTH directions
-    of every edge present and no duplicate rows; it should be
-    persisted by the caller (it is read every round; this function
-    never unpersists it) and ideally hash-partitioned by ``e_src`` so
-    the per-round neighbor join adds no edge-set exchange. Returns
-    (node, component).
+    of every edge present; duplicate rows cost work but do not change
+    the labels. It should be persisted by the caller (round 1 reads it
+    and later rounds join it; this function never unpersists it) and
+    ideally hash-partitioned by ``e_src``, so that round 1 and the
+    per-round neighbor join add no edge-set exchange. Each round runs
+    one Spark action. Returns (node, component).
     """
-    for col in ("e_src", "e_dst"):
-        id_type = und.schema[col].dataType.typeName()
-        if id_type not in _INTEGRAL_ID_TYPES:
-            raise ValueError(
-                f"connected_components requires integral node ids, got "
-                f"{id_type} for {col!r}"
-            )
+    _require_integral_ids(und, ("e_src", "e_dst"))
     # plan-audit hook: the edge pipeline is consumed HERE, inside the
     # loop-at-build operator, so this is where its plan is visible
     plancap.grab("cc input pair join", und)
 
-    # und is partitioned by e_src, so this distinct plans with no
-    # fresh exchange (hash(e_src) already clusters equal nodes).
-    # Checkpoints are LAZY (r14): the convergence checksum that
-    # follows every (re)labeling is the action that materializes the
-    # checkpoint, so each round runs ONE job instead of two (eager
-    # checkpoint + separate checksum collect) — at bench scale the
-    # loop is job-overhead-bound, and at cluster scale it halves the
-    # number of scheduling waves per round.
-    labels = und.select(F.col("e_src").alias("node")).distinct().withColumn(
-        "comp", F.col("node")
-    ).localCheckpoint(eager=False)
-
-    def _checksum(df: DataFrame) -> int:
-        # exact decimal sum: labels only ever decrease, so the total is
-        # strictly monotone until the fixpoint — a scalar convergence
-        # probe with no extra join/shuffle
-        return df.agg(F.sum(F.col("comp").cast("decimal(38,0)"))).collect()[0][0]
-
-    prev = _checksum(labels)
+    # round 1 straight off the edge table: every node's identity label
+    # against its neighbors' ids (und is symmetric, so the neighbors of
+    # e_src are its e_dst values)
+    hop = und.groupBy("e_src").agg(F.min("e_dst").alias("m")).select(
+        F.col("e_src").alias("node"), F.least("e_src", "m").alias("comp")
+    )
+    labels = prev = None
     converged = False
     rounds = 0
-    for _ in range(max_iter):
+    while rounds < max_iter:
         rounds += 1
-        neighbor = und.join(labels, und.e_src == labels.node).select(
-            F.col("e_dst").alias("node"), "comp"
-        )
-        hop = (
-            labels.union(neighbor)
-            .groupBy("node")
-            .agg(F.min("comp").alias("comp"))
-        )
+        if labels is not None:
+            neighbor = und.join(labels, und.e_src == labels.node).select(
+                F.col("e_dst").alias("node"), "comp"
+            )
+            hop = (
+                labels.union(neighbor)
+                .groupBy("node")
+                .agg(F.min("comp").alias("comp"))
+            )
         # pointer jump: comp is itself a node id, so look up ITS label
         # and adopt it (always <= comp). Left join + coalesce keeps the
         # row even if a label were not a labeled node (cannot happen —
@@ -135,9 +144,14 @@ def connected_components_from_edges(
             # so the captured plan is what every subsequent round pays
             # (round 1's plan would re-print the whole pair pipeline)
             plancap.grab("cc pointer-jump round", nxt_labels)
-        labels = nxt_labels.localCheckpoint(eager=False)
-        cur = _checksum(labels)
-        if cur == prev:
+        # the checksum rides on the checkpoint's own action; it must be
+        # eager: after a lazy checkpoint the observed sum reads None
+        obs = Observation()
+        labels = nxt_labels.observe(
+            obs, F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
+        ).localCheckpoint(eager=True)
+        cur = obs.get["s"]
+        if rounds > 1 and cur == prev:
             converged = True
             break
         prev = cur
@@ -169,42 +183,27 @@ def connected_components(
 
     ``pairs_unique=True`` asserts the caller's pair set has no
     duplicate unordered pairs, no self-loops, and one orientation per
-    pair — then the mirrored union is distinct by construction and the
+    pair — then the mirrored edges are distinct by construction and the
     dedup aggregate is skipped (performance only; duplicate edges would
     not change the labels, just the per-round cost).
     """
-    # The convergence probe sums labels as decimal; a non-numeric id
-    # type would cast to NULL, make every checksum None, and stop the
-    # loop after one round with wrong components. Enforce the contract
-    # instead of silently mislabeling (string ids: map to dense ints
-    # first, e.g. xxhash64 or a zipWithIndex-style dimension).
-    for col in (src, dst):
-        id_type = pairs.schema[col].dataType.typeName()
-        if id_type not in _INTEGRAL_ID_TYPES:
-            raise ValueError(
-                f"connected_components requires integral node ids, got "
-                f"{id_type} for {col!r}"
+    _require_integral_ids(pairs, (src, dst))
+    # both orientations of every pair from ONE scan of ``pairs``, so an
+    # expensive upstream pair plan (banded LSH with the skew-guard
+    # grid, Jaccard verification) runs once, into the persisted ``und``
+    # that every round reads — no separate persist of ``pairs`` needed
+    und = pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(src).alias("e_src"), F.col(dst).alias("e_dst")),
+                F.struct(F.col(dst).alias("e_src"), F.col(src).alias("e_dst")),
             )
-    # The undirected union scans ``pairs`` TWICE in one materialization
-    # — persist it through the union so expensive upstream pair plans
-    # (banded LSH with the skew-guard grid, Jaccard verification)
-    # compute once, then release the handle: ``und`` is the persisted
-    # edge set every round actually reads.
-    lvl = pairs.storageLevel
-    caller_cached = lvl.useMemory or lvl.useDisk
-    plancap.grab("cc input pair join", pairs)
-    pairs_c = pairs if caller_cached else pairs.persist()
-    fwd = pairs_c.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"))
-    und = fwd.union(
-        pairs_c.select(F.col(dst).alias("e_src"), F.col(src).alias("e_dst"))
-    ).repartition(F.col("e_src"))
+        ).alias("e")
+    ).select("e.e_src", "e.e_dst").repartition(F.col("e_src"))
     if not pairs_unique:
         und = und.dropDuplicates(["e_src", "e_dst"])
     und = und.persist()
     try:
-        labels = connected_components_from_edges(und, max_iter)
+        return connected_components_from_edges(und, max_iter)
     finally:
         und.unpersist()
-        if not caller_cached:
-            pairs_c.unpersist()
-    return labels
